@@ -3,7 +3,8 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "steady_total": ..., "steady_queries": {...},
-"extra_total": ..., "extra_queries": {...}, "sf": ...}.
+"scaling_queries": {...}, "extra_total": ..., "extra_queries": {...},
+"sf": ...}.
 
 Metric semantics (STABLE across rounds — r3 briefly reported warm
 times under ``value``, which conflated a metric redefinition with real
@@ -243,19 +244,16 @@ ADOPTED_QUERIES = [
     "ann_ivf_pq_rerank",
 ]
 
-#: compute-bound extras ALSO reported inside the compact ``queries``
-#: dict (r14, VERDICT r13 item 1): the headline 22 are sub-second and
+#: compute-bound extras ALSO reported under ``scaling_queries`` in the
+#: compact line: the headline 22 are sub-second and
 #: per-task-overhead-bound at sf0.1, so a low-core/high-core
 #: comparison over them reads ≈1 for every row and says nothing about
 #: whether the engine parallelizes — the queries that DO scale with
 #: cores (broadcast-kernel k-NN, IVF cell joins, Lloyd's iterations,
-#: the Arrow signature kernel) all live in the extras, which the
-#:  comparison never samples.  These rows are timed ONCE, in their
-#: usual extras position with the usual methodology, and their cold
-#: numbers are COPIED into ``queries`` so a core-count sweep sees
-#: them; ``value``/``steady_total`` remain the round-1-comparable
-#: 22-query totals (the stable metric contract above) and the extras
-#: keys keep reporting them as every round before.
+#: the Arrow signature kernel) all live in the extras.  These rows are
+#: timed ONCE, in their usual extras position with the usual
+#: methodology; ``queries`` and ``value`` stay the 22-query headline,
+#: so ``value`` is always the sum of ``queries``.
 SCALING_QUERIES = [
     "knn_join",
     "ann_ivf_knn_join",
@@ -468,10 +466,12 @@ def _canary_sec() -> float:
 PLAUSIBLE_MAX = 3.0
 
 
-def _steady_outliers(steady: dict) -> tuple[dict, "bool | None"]:
+def _steady_outliers(
+    steady: dict, sf: str, cpus: int
+) -> tuple[dict, "bool | None"]:
     """(outliers, plausible_ok) vs docs/BENCH_STEADY_REF.json; ok is
     None (gate not applicable) when the reference is missing or the
-    run's sf / core count differ from the reference's."""
+    run's ``sf`` / ``cpus`` differ from the reference's."""
     ref_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         "docs",
@@ -482,8 +482,6 @@ def _steady_outliers(steady: dict) -> tuple[dict, "bool | None"]:
             ref = json.load(f)
     except (OSError, ValueError):
         return {}, None
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if str(ref.get("sf")) != sf or int(ref.get("cpus", 0)) != cpus:
         return {}, None
     out = {}
@@ -618,34 +616,23 @@ def main() -> None:
     # reference (docs/BENCH_STEADY_REF.json) and flag >3x outliers.
     # Only applies when sf AND core count match the reference — a
     # lower SPARK_GRAFT_CPUS run inflates steady legitimately.
-    steady_outliers, plausible_ok = _steady_outliers(steady)
-
-    # the round-1-comparable totals close over the 22-query headline
-    # set BEFORE the scaling rows are copied in (metric contract at
-    # the top of this file: ``value``/``steady_total`` stay comparable
-    # over the SAME set)
-    headline_value = round(sum(cold.values()), 4)
-    headline_steady = round(sum(steady.values()), 4)
-    # r14 (VERDICT r13 item 1): expose the compute-bound extras to a
-    # core-count sweep by copying their numbers — measured once, in
-    # the extras position — into the per-query dicts.  Additive only:
-    # no headline key is removed or renamed, and the totals above
-    # exclude these rows.
-    for name in SCALING_QUERIES:
-        if name in extra_cold:
-            cold[name] = extra_cold[name]
-        if name in extra_steady:
-            steady[name] = extra_steady[name]
-
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    steady_outliers, plausible_ok = _steady_outliers(
+        steady, sf, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    )
+    # the compute-bound extras a core-count sweep reads, measured once
+    # in the extras position
+    scaling = {n: extra_cold[n] for n in SCALING_QUERIES if n in extra_cold}
+
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     full = {
         "metric": "headline_queries_total_runtime",
-        "value": headline_value,
+        "value": round(sum(cold.values()), 4),
         "unit": "sec",
         "queries": cold,
-        "steady_total": headline_steady,
+        "steady_total": round(sum(steady.values()), 4),
         "steady_queries": steady,
+        "scaling_queries": scaling,
         "extra_total": round(sum(extra_cold.values()), 4),
         "extra_queries": extra_cold,
         "extra_steady_total": round(sum(extra_steady.values()), 4),
@@ -707,6 +694,7 @@ def main() -> None:
         "unit": "sec",
         "queries": cold,
         "steady_total": full["steady_total"],
+        "scaling_queries": scaling,
         "extra_total": full["extra_total"],
         "extra_steady_total": full["extra_steady_total"],
         "canary_sec": full["canary_sec"],

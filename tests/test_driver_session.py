@@ -94,12 +94,7 @@ def test_bare_session_oracle_parity():
     assert not bad, f"bare-session mismatches: {bad}"
 
 
-def test_bench_plausibility_gate():
-    # r13: the per-query plausibility gate flags headline steady
-    # readings > PLAUSIBLE_MAX x their checked-in gates-green
-    # reference (a contention wave the canary probes missed), ignores
-    # queries without a reference (adding queries can never break it),
-    # and reports not-applicable when sf/cpus differ from the ref
+def _load_bench():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -107,21 +102,66 @@ def test_bench_plausibility_gate():
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
+    return m
+
+
+def test_bench_plausibility_gate():
+    # r13: the per-query plausibility gate flags headline steady
+    # readings > PLAUSIBLE_MAX x their checked-in gates-green
+    # reference (a contention wave the canary probes missed), ignores
+    # queries without a reference (adding queries can never break it),
+    # and reports not-applicable when sf/cpus differ from the ref.
+    # sf and cpus are passed explicitly, so both paths run on any host.
+    m = _load_bench()
     ref = json.load(
         open(os.path.join(REPO, "docs", "BENCH_STEADY_REF.json"))
     )
     base = ref["steady"]["tpch_q1"]
+    sf, cpus = str(ref["sf"]), int(ref["cpus"])
 
-    if m.SF_DIR.rstrip("/").endswith("sf0.1"):
-        out, ok = m._steady_outliers({"tpch_q1": base * 1.5})
-        assert ok is True and out == {}
+    out, ok = m._steady_outliers({"tpch_q1": base * 1.5}, sf, cpus)
+    assert ok is True and out == {}
+    out, ok = m._steady_outliers(
+        {"tpch_q1": base * 5.0, "join_asof": ref["steady"]["join_asof"]},
+        sf,
+        cpus,
+    )
+    assert ok is False and list(out) == ["tpch_q1"]
+    out, ok = m._steady_outliers({"query_without_ref": 99.0}, sf, cpus)
+    assert ok is True and out == {}
+
+    # a run at another sf or core count: gate reports N/A
+    for other_sf, other_cpus in (("0.01", cpus), (sf, cpus + 1)):
         out, ok = m._steady_outliers(
-            {"tpch_q1": base * 5.0, "join_asof": ref["steady"]["join_asof"]}
+            {"tpch_q1": base * 5.0}, other_sf, other_cpus
         )
-        assert ok is False and list(out) == ["tpch_q1"]
-        out, ok = m._steady_outliers({"query_without_ref": 99.0})
-        assert ok is True and out == {}
-    else:
-        # bench module bound to a non-reference SF: gate reports N/A
-        out, ok = m._steady_outliers({"tpch_q1": base * 5.0})
         assert ok is None and out == {}
+
+
+def test_bench_value_is_sum_of_queries(spark, tmp_path, capsys):
+    # ``value``/``steady_total`` are the sums of the per-query dicts
+    # printed next to them; the scaling rows are reported under
+    # ``scaling_queries``, never folded into ``queries``.  A tiny query
+    # set at the test sf; the host probes and the fresh-process
+    # adopted column are stubbed, and BENCH_LOCAL.json goes to tmp.
+    m = _load_bench()
+    m.SF_DIR = SF_DIR
+    m.BENCH_QUERIES = ["distinct", "agg_global"]
+    m.EXTRA_QUERIES = ["topk", "limit_skip"]
+    m.SCALING_QUERIES = ["topk"]
+    m.run_adopted = lambda names: {"queries": {}, "total": 0.0}
+    m._canary_sec = lambda: 1.0
+    m._parallel_canary = lambda s: {"ratio": 1.0}
+    m._git_provenance = lambda: {"git_sha": None, "git_dirty": None}
+    m.__file__ = str(tmp_path / "bench.py")
+
+    m.main()
+    compact = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    full = json.load(open(tmp_path / "BENCH_LOCAL.json"))
+
+    assert compact["value"] == round(sum(compact["queries"].values()), 4)
+    assert full["steady_total"] == round(sum(full["steady_queries"].values()), 4)
+    assert sorted(compact["queries"]) == ["agg_global", "distinct"]
+    assert sorted(full["steady_queries"]) == ["agg_global", "distinct"]
+    assert compact["scaling_queries"] == {"topk": full["extra_queries"]["topk"]}
+    assert full["scaling_queries"] == compact["scaling_queries"]

@@ -1,24 +1,62 @@
 """Driver-contract invariants for ``__spark_entry__``.
 
-The driver checks the FIRST 50 queries() entries (observed r2/r3);
-these tests pin (a) the ==50 head invariant and its assertion, (b) the
-round-4 rotation — every query deferred in r2/r3 now sits inside the
-checked window — and (c) the weak-keyed table cache that dies with its
-session instead of surviving on a reused ``id()``.
+The driver checks only the FIRST ``_DRIVER_CAP`` (50) queries() entries.
+queries() computes that order: ``CHANGED_THIS_ROUND`` first, then
+queries with no driver-green record, then the rest oldest last-green
+round first (from the checked-in ``CORRECTNESS_r*.json`` artifacts),
+declaration order breaking ties.  These tests pin (a) the order rule
+and its reader on synthetic artifacts, (b) that committed evidence
+never goes stale under that rule, and (c) the weak-keyed table cache
+that dies with its session instead of surviving on a reused ``id()``.
 """
 
 import gc
+import glob
+import json
+import os
+import shutil
 
 import pytest
 
 import __spark_entry__ as entry_mod
 
+#: a deferred row's driver-green evidence may lag the upcoming round by
+#: at most this many rounds.  148 rows in a 50-row window return every
+#: 3 rounds at steady state; 3 is out of reach at round 15 only because
+#: 54 rows were last green in r11 or earlier and the window holds 50.
+MAX_AGE = 4
+
+
+def _declared() -> list[str]:
+    names: list[str] = []
+    for mod in entry_mod._MODULES:
+        names += [*getattr(mod, "QUERIES", {}), *getattr(mod, "QUERIES_SPARK", {})]
+    return names
+
+
+def _write_round(root, rnd: int, rows: dict) -> None:
+    with open(os.path.join(root, f"CORRECTNESS_r{rnd:02d}.json"), "w") as f:
+        json.dump(rows, f)
+
+
+_GREEN = {"rows_match": True, "schema_match": True, "err": None}
+
+
+def _deferred_evidence(order: list[str], latest: int, last: dict) -> tuple:
+    """(deferred rows never driver-green, {deferred row: last green
+    round} more than MAX_AGE behind the upcoming round)."""
+    deferred = order[entry_mod._DRIVER_CAP :]
+    never = {k for k in deferred if k not in last}
+    stale = {
+        k: last[k] for k in deferred if k in last and latest + 1 - last[k] > MAX_AGE
+    }
+    return never, stale
+
 
 def test_head_is_exactly_driver_cap():
     names = list(entry_mod.queries())
-    head = names[: entry_mod._DRIVER_CAP]
-    assert len(names) == entry_mod._DRIVER_CAP + len(entry_mod._DEFER_PAST_CAP)
-    assert not set(head) & set(entry_mod._DEFER_PAST_CAP)
+    assert sorted(names) == sorted(_declared())
+    assert len(names) > entry_mod._DRIVER_CAP
     # oracle dict must present the same order (driver zips them);
     # every query carries an oracle twin as of r7 (approx operators
     # emit deterministic validity bands instead of raw estimates)
@@ -27,131 +65,95 @@ def test_head_is_exactly_driver_cap():
 
 
 def test_rotation_keeps_new_and_changed_operators_in_window():
-    # standing rule (VERDICT r3/r4): every operator added or changed
-    # this round must sit inside the driver's 50-entry checked window
-    # the round it changes.  Round 14 (optimization): no additions;
-    # the three operators whose internals CHANGED this round
-    # (ngram_jaccard — aggregated PPJoin pair filter; dedup_minhash —
-    # scan-level min_tasks dial; knn_join — per-worker broadcast
-    # hydration memo), join_asof_nearest (changed r13 without a
-    # re-cert that round), and the eighth re-certification sweep —
-    # ALL fourteen r7-evidence rows, which would otherwise breach the
-    # MAX_AGE=6 staleness bound at round 14.
-    must_be_checked = {
-        # r14 changed operators (this optimization round)
-        "ngram_jaccard",
-        "dedup_minhash",
-        "knn_join",
-        # changed r13 (growing window frame) — re-cert owed
-        "join_asof_nearest",
-        # r14 re-certifications: ALL fourteen r7-evidence rows
-        "limit_skip",
-        "agg_global",
-        "sort_multi",
-        "coercion",
-        "set_union",
-        "agg_rollup",
-        "cross_join_filter",
-        "join_nonequi_filter",
-        "feature_extract",
-        "tpch_q5_like",
-        "join_anti",
-        "pipeline_clean_incr",
-        "dup_span_frac",
-        "profile_table",
-        # earlier rows that keep their green (family reps documented
-        # at their _DEFER_PAST_CAP entries)
-        "flagship",
-        "tpch_q1",
-        "topk",          # window_topk_per_group's deferral rep
-        "distinct",      # set-family deferral rep
-        "vocab_drift",   # tfidf_topterms' deferral rep
-        "bm25_search",   # stays in-window: the hybrid row consumes
-                         # RANKS only; score values need their own row
-        "window_running_sum",   # only in-window window-function row
-        "dedup_text_auto",      # routes to ppjoin at driver density:
-                                # hash-checks the CHANGED candidate
-                                # machinery through its own route
-        "train_test_split",     # hash-split core rep
-        "bpe_encode_checked",   # only in-window tokenizer row
-        "ann_ivf_trained",      # ann_ivf's deferral rep; trains the
-                                # centroid path end-to-end
-        "ann_ivf_knn_join",     # banded-cosine family rep
-        "knn_recall_ivf_probe", # fused probe kernel + shared
-                                # _probe_global_topk rep
-        "ann_ivf_pq",           # codebook/index family rep
-        "ann_ivf_pq_knn_join",  # IVFADC join rep
-        "events_session_window",
-        "dedup_minhash_ingest_stream",
-        "dedup_labels_stream",  # CC-semantics rep (from-scratch-CC
-                                # oracle) for the deferred state rows
-        "cms_stream_heavy_hitters",
-        "bloom_precheck_stream",
-    }
+    # every operator changed this round sits inside the driver's
+    # checked window the round it changes
     head = set(list(entry_mod.queries())[: entry_mod._DRIVER_CAP])
-    assert must_be_checked <= head
+    assert entry_mod.CHANGED_THIS_ROUND <= head
 
 
 def test_deferred_evidence_staleness_bounded():
-    """VERDICT r12 item 3: the rotation scheme's weak point is
-    evidence AGE — a row deferred for many rounds rests on a stale
-    driver-green record while the code around it moves.  This guard
-    computes every query's last driver-green round from the checked-in
-    ``CORRECTNESS_r*.json`` artifacts and fails when any row sitting
-    OUTSIDE the upcoming round's window would be more than ``MAX_AGE``
-    rounds behind it — forcing the sweep budget to keep pace instead
-    of silently slipping.  In-window rows count as current (the
-    driver certifies them this round); a deferred row with NO green
-    record at all is a rotation bug (new/changed entries must enter
-    in-window the round they appear)."""
-    import glob
-    import json
-    import os
-    import re
-
-    repo_root = os.path.dirname(os.path.abspath(entry_mod.__file__))
-    last: dict[str, int] = {}
-    rounds: list[int] = []
-    for f in glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json")):
-        r = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        rounds.append(r)
-        for k, v in json.load(open(f)).items():
-            if (
-                v.get("rows_match")
-                and v.get("schema_match")
-                and not v.get("err")
-            ):
-                last[k] = max(last.get(k, 0), r)
-    if not rounds:
+    """A row deferred for many rounds rests on a stale driver-green
+    record while the code around it moves.  Every query's last
+    driver-green round comes from the checked-in ``CORRECTNESS_r*.json``
+    artifacts; this fails when any row sitting OUTSIDE the upcoming
+    round's window would be more than ``MAX_AGE`` rounds behind it.
+    In-window rows count as current (the driver certifies them this
+    round); a deferred row with NO green record at all is an ordering
+    bug (never-green rows lead the window)."""
+    latest, last = entry_mod._last_green(entry_mod._HERE)
+    if not latest:
         pytest.skip("no driver correctness artifacts checked in")
-    upcoming = max(rounds) + 1
-    MAX_AGE = 6
-    names = list(entry_mod.queries())
-    head = set(names[: entry_mod._DRIVER_CAP])
-    deferred = [k for k in names if k not in head]
-    never_checked = {k for k in deferred if k not in last}
-    assert not never_checked, (
-        f"deferred rows with no driver-green record: {never_checked} — "
-        "new/changed entries must rotate IN-window the round they appear"
+    never, stale = _deferred_evidence(list(entry_mod.queries()), latest, last)
+    assert not never, (
+        f"deferred rows with no driver-green record: {never} — "
+        "new/changed entries must sit in-window the round they appear"
     )
-    stale = {
-        k: last[k]
-        for k in deferred
-        if upcoming - last[k] > MAX_AGE
-    }
     assert not stale, (
         f"deferred rows whose driver evidence is >{MAX_AGE} rounds "
-        f"behind round {upcoming}: {stale} — rotate them into the "
-        "window (raise the sweep budget) before adding new entries"
+        f"behind round {latest + 1}: {stale}"
     )
 
 
-def test_ordered_asserts_on_wrong_head_size():
-    qs = entry_mod.queries()
-    too_many = dict(qs)
-    too_many["brand_new_query"] = next(iter(qs.values()))
-    with pytest.raises(AssertionError, match="rotation"):
-        entry_mod._ordered(too_many)
+def test_window_order_without_artifacts_is_declaration_order(tmp_path, monkeypatch):
+    assert entry_mod._last_green(str(tmp_path)) == (0, {})
+    monkeypatch.setattr(entry_mod, "_HERE", str(tmp_path))
+    assert list(entry_mod.queries()) == _declared()
+
+
+def test_window_order_changed_then_never_green_then_oldest(tmp_path):
+    names = ["a", "b", "c", "d", "e", "f", "g"]
+    _write_round(tmp_path, 1, {n: _GREEN for n in ("a", "b", "c", "d")})
+    _write_round(tmp_path, 2, {n: _GREEN for n in ("b", "f")})
+    _write_round(tmp_path, 3, {n: _GREEN for n in ("d", "g")})
+    latest, last = entry_mod._last_green(str(tmp_path))
+    assert latest == 3
+    assert last == {"a": 1, "b": 2, "c": 1, "d": 3, "f": 2, "g": 3}
+    # changed g leads; e never green; a, c tie at r1 (declaration order)
+    order = entry_mod._window_order(names, last, frozenset({"g"}))
+    assert order == ["g", "e", "a", "c", "b", "f", "d"]
+
+
+def test_last_green_skips_red_schema_mismatch_and_err(tmp_path):
+    _write_round(tmp_path, 1, {n: _GREEN for n in ("red", "schema", "err")})
+    _write_round(
+        tmp_path,
+        2,
+        {
+            "red": {"rows_match": False, "schema_match": True},
+            "schema": {"rows_match": True, "schema_match": False},
+            "err": {"rows_match": True, "schema_match": True, "err": "boom"},
+            "never": {"rows_match": False, "schema_match": False},
+        },
+    )
+    latest, last = entry_mod._last_green(str(tmp_path))
+    assert latest == 2
+    assert last == {"red": 1, "schema": 1, "err": 1}
+
+
+def test_window_order_rejects_unknown_or_oversized_changed():
+    names = [f"q{i}" for i in range(entry_mod._DRIVER_CAP + 1)]
+    with pytest.raises(ValueError, match="undeclared"):
+        entry_mod._window_order(names, {}, frozenset({"no_such_query"}))
+    with pytest.raises(ValueError, match="driver window"):
+        entry_mod._window_order(names, {}, frozenset(names))
+    assert entry_mod._window_order(names, {}, frozenset(names[:-1]))[-1] == names[-1]
+
+
+def test_window_rotation_keeps_deferred_evidence_fresh(tmp_path):
+    # the committed state, then three simulated driver rounds in which
+    # every head row turns green: no deferred row ever ages past MAX_AGE
+    committed = glob.glob(os.path.join(entry_mod._HERE, "CORRECTNESS_r*.json"))
+    if not committed:
+        pytest.skip("no driver correctness artifacts checked in")
+    for path in committed:
+        shutil.copy(path, tmp_path)
+    names = _declared()
+    for _ in range(4):
+        latest, last = entry_mod._last_green(str(tmp_path))
+        order = entry_mod._window_order(names, last, frozenset())
+        assert _deferred_evidence(order, latest, last) == (set(), {})
+        head = order[: entry_mod._DRIVER_CAP]
+        _write_round(tmp_path, latest + 1, {n: _GREEN for n in head})
 
 
 def test_table_cache_validates_session_identity(spark):
